@@ -8,8 +8,8 @@ elayoubidriss/HistoricalDataDocumentParserSystem (reference at
   HTML DOM parse + Arc90-style boilerplate classification, PDF-subset
   layout pass. This module IS the correctness oracle; the Spark UDFs call
   exactly these functions, so Spark-vs-oracle equality is structural.
-- ``pipeline``    : the flagship Spark job (read -> repartition by
-  xxhash64(url) -> mapInPandas(extract) -> write extracted + lineage).
+- ``pipeline``    : the flagship Spark job (read -> repartitionById on
+  the resume bucket -> mapInPandas(extract) -> write extracted + lineage).
 - ``catalog``     : Iceberg-style table emulation (partitioned parquet +
   snapshot manifest + lineage table with MERGE-style resume).
 - ``operators/``  : dedup (exact/minhash-LSH/simhash/ngram-jaccard/

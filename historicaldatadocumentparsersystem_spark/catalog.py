@@ -6,9 +6,17 @@ Iceberg catalog can replace 1:1:
 
 - ``extracted/`` : parquet partitioned by ``part_id`` with dynamic
   partition overwrite -> re-processing a bucket atomically replaces it
-  (MERGE-on-processed-partitions semantics).
+  (MERGE-on-processed-partitions semantics); columns ``TABLE_SCHEMA``,
+  the one declaration of its on-disk format. ``run_extraction`` writes
+  each bucket from one task, so a full run leaves one file per bucket.
 - ``lineage/``   : append-only parquet of per-partition metrics rows
-  (FIXTURES.md §3). ``done_partitions`` is the resume checkpoint read.
+  (FIXTURES.md §3), read with the declared ``LINEAGE_SCHEMA``.
+  ``done_buckets`` is the resume checkpoint: one read per run gives
+  the done buckets and their output rows; ``done_partitions`` and
+  ``snapshot_output_rows`` are views of it. ``append_lineage``
+  returns the rows it wrote, observed on the write, so a run commits
+  without reading lineage back. A missing table is "nothing done";
+  a table that cannot be read raises.
 - ``manifest.json`` : snapshot bookkeeping (ids passed in by the caller,
   never generated from the clock — determinism rule).
 
@@ -21,8 +29,58 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, LongType,
+                               StringType, StructField, StructType,
+                               TimestampType)
+
+SPAN_TYPE = StructType([
+    StructField("start", LongType(), False),
+    StructField("end", LongType(), False),
+    StructField("kind", StringType(), False),
+])
+
+# rows of pipeline.extract_df
+EXTRACTED_SCHEMA = StructType([
+    StructField("url", StringType(), False),
+    StructField("warc_ts", TimestampType(), True),
+    StructField("lang", StringType(), True),
+    StructField("doc_kind", StringType(), False),
+    StructField("title", StringType(), True),
+    StructField("extracted_text", StringType(), True),
+    StructField("spans", ArrayType(SPAN_TYPE, False), True),
+    StructField("n_blocks", IntegerType(), False),
+    StructField("score", DoubleType(), False),
+    StructField("failed", IntegerType(), False),   # 1 if fallback-on-error
+    StructField("bytes_in", LongType(), False),    # lineage metric
+    StructField("part_id", IntegerType(), False),  # stable resume bucket
+])
+
+# the extracted table as run_extraction writes it: each row carries its run
+TABLE_SCHEMA = StructType(
+    EXTRACTED_SCHEMA.fields + [StructField("run_id", StringType(), False)])
+
+LINEAGE_SCHEMA = StructType([
+    StructField("run_id", StringType(), False),
+    StructField("snapshot_id", StringType(), False),
+    StructField("partition_id", IntegerType(), False),
+    StructField("input_rows", LongType(), False),
+    StructField("output_rows", LongType(), False),
+    StructField("failed_rows", LongType(), False),
+    StructField("bytes_in", LongType(), False),
+    StructField("chars_out", LongType(), False),
+    StructField("wall_ms", LongType(), False),
+    StructField("status", StringType(), False),
+])
+
+
+def _sum_by_bucket(rows) -> dict[int, int]:
+    """(partition_id, output_rows) pairs -> output rows per bucket."""
+    out: dict[int, int] = {}
+    for part, n in rows:
+        out[part] = out.get(part, 0) + n
+    return out
 
 
 class Catalog:
@@ -38,8 +96,8 @@ class Catalog:
         """Write partitioned by part_id; dynamic overwrite = idempotent.
 
         No post-write count: row totals come from the lineage rows
-        (``snapshot_output_rows``) — an incremental run must never pay
-        a full-table scan just for bookkeeping.
+        (``append_lineage``) — an incremental run must never pay a
+        full-table scan just for bookkeeping.
         """
         spark = df.sparkSession
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -54,46 +112,56 @@ class Catalog:
         """Partition-pruned read of specific buckets: ``part_id IN``
         lands as a PartitionFilter on the parquet scan (pinned by
         tests/test_plans.py), so an incremental lineage pass touches
-        only this run's buckets — never the whole 100 TB table."""
-        return (self.read_extracted(spark)
+        only this run's buckets — never the whole 100 TB table. Read
+        with ``TABLE_SCHEMA``, so no footer-reading inference job."""
+        return (spark.read.schema(TABLE_SCHEMA).parquet(self.extracted_path)
                 .where(F.col("part_id").isin(list(parts))))
 
     # -- lineage table ------------------------------------------------------
-    def append_lineage(self, df: DataFrame) -> None:
-        df.write.mode("append").parquet(self.lineage_path)
+    def append_lineage(self, df: DataFrame) -> dict[int, int]:
+        """Append lineage rows; returns the output rows per partition
+        of the ContentExtracted rows written, observed on the write
+        itself (no read-back)."""
+        obs = Observation()
+        done = F.col("status") == "ContentExtracted"
+        df.observe(obs, F.collect_list(F.when(done, F.struct(
+            "partition_id", "output_rows"))).alias("rows")) \
+            .write.mode("append").parquet(self.lineage_path)
+        return _sum_by_bucket(obs.get["rows"])
 
     def read_lineage(self, spark: SparkSession) -> DataFrame | None:
+        """The lineage table, read with ``LINEAGE_SCHEMA``; None only
+        when no lineage was ever written. A corrupt table is never
+        taken as "nothing done" (that would silently re-extract
+        everything): the first action over it raises."""
         if not os.path.isdir(self.lineage_path):
             return None
-        try:
-            return spark.read.parquet(self.lineage_path)
-        except Exception:
-            return None
+        return spark.read.schema(LINEAGE_SCHEMA).parquet(self.lineage_path)
+
+    def done_buckets(self, spark: SparkSession,
+                     snapshot_id: str) -> dict[int, int]:
+        """Buckets already ContentExtracted for this snapshot (resume),
+        each with its output rows: one lineage read, one Spark job.
+        Each bucket is written exactly once per snapshot (done buckets
+        are skipped on resume), so the summed rows equal the table's
+        count without scanning the table."""
+        lin = self.read_lineage(spark)
+        if lin is None:
+            return {}
+        return _sum_by_bucket(
+            lin.where((lin.snapshot_id == snapshot_id)
+                      & (lin.status == "ContentExtracted"))
+            .select("partition_id", "output_rows").collect())
 
     def done_partitions(self, spark: SparkSession,
                         snapshot_id: str) -> set[int]:
-        """Buckets already ContentExtracted for this snapshot (resume)."""
-        lin = self.read_lineage(spark)
-        if lin is None:
-            return set()
-        rows = (lin.where((lin.snapshot_id == snapshot_id)
-                          & (lin.status == "ContentExtracted"))
-                .select("partition_id").distinct().collect())
-        return {r.partition_id for r in rows}
+        """Buckets already ContentExtracted for this snapshot."""
+        return set(self.done_buckets(spark, snapshot_id))
 
     def snapshot_output_rows(self, spark: SparkSession,
                              snapshot_id: str) -> int:
-        """Total rows extracted for a snapshot, from LINEAGE — each
-        bucket is written exactly once per snapshot (done buckets are
-        skipped on resume), so a plain sum over its lineage rows equals
-        the table count without scanning the table."""
-        lin = self.read_lineage(spark)
-        if lin is None:
-            return 0
-        total = (lin.where((lin.snapshot_id == snapshot_id)
-                           & (lin.status == "ContentExtracted"))
-                 .agg(F.sum("output_rows")).first()[0])
-        return int(total or 0)
+        """Total rows extracted for a snapshot, from lineage."""
+        return sum(self.done_buckets(spark, snapshot_id).values())
 
     # -- manifest -----------------------------------------------------------
     def commit_snapshot(self, snapshot_id: str, meta: dict) -> None:

@@ -2,16 +2,23 @@
 
 Plan shape (SURVEY.md §4.3 target):
 
-    Scan documents (prune cols; partitions NOT IN lineage.done)
-     └─ Exchange hashpartitioning(xxhash64(url), N)   <- the only shuffle
-         └─ MapInPandas extract_batch()               <- DOM/PDF parse,
-             └─ write extracted (partitionBy part_id)    classify, spans
-             └─ lineage rows aggregated from the written output
+    Scan documents (prune cols; part_id IN todo buckets on a resume)
+     └─ Exchange shufflepartitionidpassthrough(part_id, N) <- the only
+         │                                                   shuffle
+         └─ MapInPandas extract_batch()          <- DOM/PDF parse,
+             └─ write extracted (partitionBy part_id)   classify, spans
+             └─ lineage rows aggregated from the written buckets
+
+The exchange is keyed on the resume bucket the write partitions by, so
+task i holds bucket i only and writes one file. On a resume with k of
+N buckets left, each bucket is split over N // k tasks by a url-hash
+salt, so every task still holds one bucket and all N stay busy.
 
 All per-document logic is Arrow-batched (``mapInPandas``) — no per-row
-Python at the DataFrame level (north rule). Skew: url is unique so
-xxhash64(url) spreads rows uniformly even when one host owns 30% of
-urls; host-level aggregations use ``operators.skew.salted_key``.
+Python at the DataFrame level (north rule). Skew: part_id is
+pmod(xxhash64(url), N) and url is unique, so buckets stay uniform even
+when one host owns 30% of urls; host-level aggregations use
+``operators.skew.salted_key``.
 
 Reference trace generalized: ``main.py:91-104`` batch walk ->
 ``base_parser.py:20-50`` per-file parse -> ``batch_processor.py:39-65``
@@ -25,37 +32,11 @@ import time
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, LongType,
-                               StringType, StructField, StructType,
-                               TimestampType)
 
+from .catalog import EXTRACTED_SCHEMA, Catalog
 from .extractor import extract_document
-
-# ---------------------------------------------------------------------------
-# schemas
-
-SPAN_TYPE = StructType([
-    StructField("start", LongType(), False),
-    StructField("end", LongType(), False),
-    StructField("kind", StringType(), False),
-])
-
-EXTRACTED_SCHEMA = StructType([
-    StructField("url", StringType(), False),
-    StructField("warc_ts", TimestampType(), True),
-    StructField("lang", StringType(), True),
-    StructField("doc_kind", StringType(), False),
-    StructField("title", StringType(), True),
-    StructField("extracted_text", StringType(), True),
-    StructField("spans", ArrayType(SPAN_TYPE, False), True),
-    StructField("n_blocks", IntegerType(), False),
-    StructField("score", DoubleType(), False),
-    StructField("failed", IntegerType(), False),   # 1 if fallback-on-error
-    StructField("bytes_in", LongType(), False),    # lineage metric
-    StructField("part_id", IntegerType(), False),  # stable resume bucket
-])
 
 _IN_COLS = ["url", "warc_ts", "lang", "html", "text", "part_id"]
 
@@ -116,33 +97,40 @@ def with_part_id(df: DataFrame, num_buckets: int) -> DataFrame:
         .cast("int"))
 
 
-def extract_df(docs: DataFrame, num_buckets: int = 64,
-               shuffle: bool = True) -> DataFrame:
+def _bucket_task(parts: list[int], num_buckets: int) -> Column:
+    """Exchange target of each row: a task that holds one bucket only.
+
+    With every bucket to do, task i is bucket i. With k of
+    ``num_buckets`` left, the r-th remaining bucket is split over
+    tasks [r*s, (r+1)*s), s = num_buckets // k, by a murmur3 url salt;
+    part_id is an xxhash64 residue, so the salt is independent of it.
+    """
+    if len(parts) == num_buckets:
+        return F.col("part_id")
+    split = num_buckets // len(parts)
+    rank = F.array_position(F.array(*map(F.lit, parts)), F.col("part_id")) - 1
+    return (rank * split + F.pmod(F.hash(F.col("url")), F.lit(split))) \
+        .cast("int")
+
+
+def extract_df(docs: DataFrame, num_buckets: int = 64, shuffle: bool = True,
+               parts: list[int] | None = None) -> DataFrame:
     """documents DataFrame -> extracted DataFrame (lazy; no side effects).
 
-    Narrow select FIRST so column pruning reaches the scan, then the one
-    explicit shuffle on xxhash64(url) (north rule), then the fused
-    Arrow-batched extraction stage.
+    Narrow select FIRST so column pruning reaches the scan, then the
+    one explicit shuffle, keyed on the resume bucket (``_bucket_task``),
+    then the fused Arrow-batched extraction stage. ``parts`` limits
+    the plan to those buckets (a resume); None means all of them.
     """
     df = with_part_id(
         docs.select("url", "warc_ts", "lang", "html", "text"), num_buckets)
+    parts = list(range(num_buckets)) if parts is None else sorted(parts)
+    if len(parts) < num_buckets:
+        # IN over a small set: stays a pushable scan predicate
+        df = df.where(F.col("part_id").isin(parts))
     if shuffle:
-        df = df.repartition(num_buckets, F.xxhash64(F.col("url")))
+        df = df.repartitionById(num_buckets, _bucket_task(parts, num_buckets))
     return df.select(*_IN_COLS).mapInPandas(extract_batch, EXTRACTED_SCHEMA)
-
-
-LINEAGE_SCHEMA = StructType([
-    StructField("run_id", StringType(), False),
-    StructField("snapshot_id", StringType(), False),
-    StructField("partition_id", IntegerType(), False),
-    StructField("input_rows", LongType(), False),
-    StructField("output_rows", LongType(), False),
-    StructField("failed_rows", LongType(), False),
-    StructField("bytes_in", LongType(), False),
-    StructField("chars_out", LongType(), False),
-    StructField("wall_ms", LongType(), False),
-    StructField("status", StringType(), False),
-])
 
 
 def lineage_from_extracted(extracted: DataFrame, run_id: str,
@@ -182,53 +170,48 @@ def run_extraction(spark: SparkSession, docs: DataFrame, out_dir: str,
                    num_buckets: int = 64) -> dict:
     """Execute the flagship job with exact resume-from-checkpoint.
 
-    1. read lineage; buckets already ContentExtracted for this snapshot
-       are skipped (partition pruning via part_id predicate)
-    2. extract remaining buckets; write parquet partitioned by part_id
-       with dynamic partition overwrite (idempotent re-runs)
-    3. append lineage rows marking those buckets done — aggregated from
-       a PARTITION-PRUNED read of just this run's buckets (part_id IN
-       todo carries to the scan as a PartitionFilter), FILTERED to this
-       run's run_id (each extracted row carries it): a todo bucket that
-       received zero rows this snapshot is not rewritten by dynamic
-       overwrite, so without the run filter a previous snapshot's
-       leftover rows in that partition would be counted into this
-       snapshot's lineage (and the bucket wrongly marked done with
-       foreign data). Totals come from the lineage rows.
-       An incremental run never re-scans previously extracted
-       partitions.
+    1. read lineage once (``Catalog.done_buckets``): the buckets
+       already ContentExtracted for this snapshot, with their output
+       rows, are skipped (partition pruning via part_id predicate)
+    2. extract the remaining buckets through ``extract_df`` and write
+       parquet partitioned by part_id with dynamic partition overwrite
+       (idempotent re-runs); every write task holds one bucket, so it
+       writes one file
+    3. append lineage rows marking those buckets done, in one
+       aggregate-and-write job over a PARTITION-PRUNED read of just
+       this run's buckets (part_id IN todo carries to the scan as a
+       PartitionFilter), FILTERED to this run's run_id (each extracted
+       row carries it): a todo bucket that received zero rows this
+       snapshot is not rewritten by dynamic overwrite, so without the
+       run filter a previous snapshot's leftover rows in that
+       partition would be counted into this snapshot's lineage (and
+       the bucket wrongly marked done with foreign data). An
+       incremental run never re-scans previously extracted partitions.
+    4. commit the manifest. Its totals are summed on the driver from
+       step 1's read plus the new lineage rows observed on step 3's
+       write; lineage is not read again.
     """
-    from .catalog import Catalog
     cat = Catalog(out_dir)
-    done = cat.done_partitions(spark, snapshot_id)
-    todo_parts = sorted(set(range(num_buckets)) - done)
+    done = cat.done_buckets(spark, snapshot_id)
+    todo_parts = sorted(set(range(num_buckets)) - done.keys())
     t0 = time.monotonic()
+    new = {}
     if todo_parts:
-        docs_b = with_part_id(
-            docs.select("url", "warc_ts", "lang", "html", "text"),
-            num_buckets)
-        todo = docs_b
-        if done:
-            # IN over a small set: stays a pushable scan predicate
-            todo = docs_b.where(F.col("part_id").isin(todo_parts))
-        extracted = (todo
-                     .repartition(num_buckets, F.xxhash64(F.col("url")))
-                     .select(*_IN_COLS)
-                     .mapInPandas(extract_batch, EXTRACTED_SCHEMA)
-                     .withColumn("run_id", F.lit(run_id)))
-        cat.write_extracted(extracted)
+        cat.write_extracted(
+            extract_df(docs, num_buckets, parts=todo_parts)
+            .withColumn("run_id", F.lit(run_id)))
         wall_ms = int((time.monotonic() - t0) * 1000)
         lineage = lineage_from_extracted(
             cat.read_extracted_parts(spark, todo_parts)
             .where(F.col("run_id") == run_id),
             run_id, snapshot_id, wall_ms)
-        cat.append_lineage(lineage)
+        new = cat.append_lineage(lineage)
     else:
         wall_ms = int((time.monotonic() - t0) * 1000)
-    n_total = cat.snapshot_output_rows(spark, snapshot_id)
+    buckets = {**done, **new}
+    n_total = sum(buckets.values())
     cat.commit_snapshot(snapshot_id, {
         "run_id": run_id, "rows_total": n_total,
-        "num_buckets": num_buckets,
-        "buckets_done": sorted(cat.done_partitions(spark, snapshot_id))})
+        "num_buckets": num_buckets, "buckets_done": sorted(buckets)})
     return {"rows_written": n_total, "wall_ms": wall_ms,
             "skipped_partitions": len(done)}

@@ -5,6 +5,10 @@ url between the Spark job (mapInPandas over Arrow batches) and the
 pure-Python oracle (input_hint invariant).
 """
 
+import json
+import os
+from collections import Counter
+
 import pytest
 
 from historicaldatadocumentparsersystem_spark import fixtures, pipeline
@@ -16,6 +20,29 @@ N = 200
 @pytest.fixture(scope="module")
 def docs_df(spark):
     return fixtures.corpus_df(spark, N, num_partitions=8).cache()
+
+
+def files_per_bucket(out):
+    """{part_id: data files} of a catalog's extracted table."""
+    from historicaldatadocumentparsersystem_spark.catalog import Catalog
+    return Counter(int(os.path.basename(os.path.dirname(f)).split("=")[1])
+                   for f in Catalog(out).data_files())
+
+
+def assert_manifest_matches_lineage(spark, out, snapshot_id):
+    """The manifest's totals, summed on the driver without reading
+    lineage back, equal the committed lineage table's."""
+    from pyspark.sql import functions as F
+    from historicaldatadocumentparsersystem_spark.catalog import Catalog
+    with open(os.path.join(out, "manifest.json")) as fh:
+        snap = json.load(fh)["snapshots"][snapshot_id]
+    lin = Catalog(out).read_lineage(spark)
+    lin = lin.where((lin.snapshot_id == snapshot_id)
+                    & (lin.status == "ContentExtracted"))
+    assert snap["rows_total"] == lin.agg(F.sum("output_rows")).first()[0]
+    assert snap["buckets_done"] == sorted(
+        r.partition_id for r in lin.select("partition_id").distinct()
+        .collect())
 
 
 @pytest.fixture(scope="module")
@@ -70,6 +97,59 @@ def test_run_extraction_and_lineage(spark, docs_df, tmp_path):
     assert cat.done_partitions(spark, "s1") == set(
         r.part_id for r in cat.read_extracted(spark)
         .select("part_id").distinct().collect())
+    # one write task per bucket: exactly one data file in each bucket
+    assert files_per_bucket(out) == {p: 1 for p in range(16)}
+    assert_manifest_matches_lineage(spark, out, "s1")
+
+
+def test_run_extraction_spark_jobs(spark, docs_df, tmp_path):
+    """Exact Spark-job count of a call, from the status tracker. On a
+    fresh catalog: the exchange's map stage and the extracted write,
+    then the lineage aggregate's map stage and the lineage write — no
+    lineage read at all, before or after. A re-run with every bucket
+    done is the one lineage read."""
+    docs_df.count()              # materialize the cache outside the count
+    sc = spark.sparkContext
+
+    def jobs(group, run_id):
+        sc.setJobGroup(group, group)
+        try:
+            pipeline.run_extraction(spark, docs_df, str(tmp_path / "cat"),
+                                    run_id=run_id, snapshot_id="s1",
+                                    num_buckets=8)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("jobs-fresh", "r1") == 4
+    assert jobs("jobs-done", "r2") == 1
+
+
+def test_corrupt_lineage_raises(spark, docs_df, tmp_path):
+    """A lineage table that cannot be read must fail the run, not pass
+    for "nothing done" and silently re-extract everything; a missing
+    lineage directory is still "nothing done"."""
+    from historicaldatadocumentparsersystem_spark.catalog import (
+        LINEAGE_SCHEMA, Catalog)
+    cat = Catalog(str(tmp_path / "cat"))
+    assert cat.read_lineage(spark) is None
+    assert cat.done_partitions(spark, "s1") == set()
+    cat.append_lineage(spark.createDataFrame(
+        [("r", "s1", 0, 5, 5, 0, 100, 50, 1, "ContentExtracted")],
+        LINEAGE_SCHEMA).coalesce(1))
+    assert cat.done_buckets(spark, "s1") == {0: 5}
+    (path,) = [os.path.join(cat.lineage_path, f)
+               for f in os.listdir(cat.lineage_path) if f.endswith(".parquet")]
+    with open(path, "r+b") as fh:
+        fh.truncate(os.path.getsize(path) // 2)
+    with pytest.raises(Exception, match="parquet|Parquet"):
+        cat.done_partitions(spark, "s1")
+    with pytest.raises(Exception, match="parquet|Parquet"):
+        pipeline.run_extraction(spark, docs_df, cat.root, run_id="r2",
+                                snapshot_id="s1", num_buckets=8)
+    assert not os.path.exists(cat.extracted_path)
 
 
 def test_new_snapshot_never_counts_foreign_rows(spark, docs_df, tmp_path):
@@ -103,6 +183,32 @@ def test_new_snapshot_never_counts_foreign_rows(spark, docs_df, tmp_path):
         .select("part_id").distinct().collect())
 
 
+def test_rerun_with_only_empty_buckets_left(spark, docs_df, tmp_path):
+    """Re-running the same partial input for one snapshot leaves only
+    buckets that get zero rows: the lineage write is empty, and its
+    observed metrics must still arrive (the call returns) with the
+    manifest's totals unchanged."""
+    from pyspark.sql import functions as F
+
+    out = str(tmp_path / "cat")
+    half = docs_df.transform(lambda d: pipeline.with_part_id(d, 8)) \
+                  .where(F.col("part_id") < 4).drop("part_id")
+    first = pipeline.run_extraction(spark, half, out, run_id="r1",
+                                    snapshot_id="s1", num_buckets=8)
+    with open(os.path.join(out, "manifest.json")) as fh:
+        snap1 = json.load(fh)["snapshots"]["s1"]
+    assert snap1["buckets_done"] == [0, 1, 2, 3]
+
+    again = pipeline.run_extraction(spark, half, out, run_id="r2",
+                                    snapshot_id="s1", num_buckets=8)
+    assert again["skipped_partitions"] == 4
+    assert again["rows_written"] == first["rows_written"] == half.count()
+    with open(os.path.join(out, "manifest.json")) as fh:
+        snap2 = json.load(fh)["snapshots"]["s1"]
+    assert snap2 == {**snap1, "run_id": "r2"}
+    assert_manifest_matches_lineage(spark, out, "s1")
+
+
 def test_exact_resume(spark, docs_df, tmp_path):
     """Pre-populate lineage with half the buckets done; run; assert only
     the other half processed and final contents == a clean full run
@@ -128,6 +234,16 @@ def test_exact_resume(spark, docs_df, tmp_path):
     done_before = Catalog(res_out).done_partitions(spark, "s1")
     assert done_before and done_before <= {0, 1, 2, 3}
 
+    # the remaining buckets spread over all 8 tasks, one bucket per task
+    todo = sorted(set(range(8)) - done_before)
+    split = 8 // len(todo)
+    tasks = (pipeline.extract_df(docs_df, num_buckets=8, parts=todo)
+             .select(F.spark_partition_id().alias("task"), "part_id")
+             .distinct().collect())
+    assert Counter(r.task for r in tasks) == {
+        t: 1 for t in range(len(todo) * split)}
+    assert Counter(r.part_id for r in tasks) == {p: split for p in todo}
+
     stats = pipeline.run_extraction(spark, docs_df, res_out, run_id="r-rest",
                                     snapshot_id="s1", num_buckets=8)
     assert stats["skipped_partitions"] == len(done_before)
@@ -135,6 +251,10 @@ def test_exact_resume(spark, docs_df, tmp_path):
         (r.url, r.extracted_text, r.doc_kind)
         for r in Catalog(res_out).read_extracted(spark).collect())
     assert resumed == golden
+    # each remaining bucket written by its `split` tasks: <= 8 files
+    files = files_per_bucket(res_out)
+    assert {p: files[p] for p in todo} == {p: split for p in todo}
+    assert_manifest_matches_lineage(spark, res_out, "s1")
 
     # second full run over the same snapshot is a no-op (all buckets done)
     stats2 = pipeline.run_extraction(spark, docs_df, res_out, run_id="r3",

@@ -35,12 +35,17 @@ def docs_parquet(spark, tmp_path_factory):
 
 
 def test_flagship_single_exchange(spark, docs_parquet):
+    """One exchange below MapInPandas, keyed on the resume bucket the
+    write partitions by: task i holds bucket i, so it writes one file."""
     src = spark.read.parquet(docs_parquet)
     df = pipeline.extract_df(src, num_buckets=8)
     plan = physical_plan(df)
     assert count_exchanges(df) == 1, plan
     assert "MapInPandas" in plan
-    assert "hashpartitioning(xxhash64(url" in plan
+    tree = plan.split("\n\n")[0]
+    assert tree.index("MapInPandas") < tree.index("Exchange"), plan
+    assert ("shufflepartitionidpassthrough(direct_shuffle_partition_id"
+            "(part_id") in plan, plan
 
 
 def test_flagship_scan_prunes_columns(spark, docs_parquet):
